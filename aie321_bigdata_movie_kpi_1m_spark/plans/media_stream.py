@@ -250,49 +250,41 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: state-store partition count of a streaming query, frozen from
+#: spark.sql.shuffle.partitions at start() and into the checkpoint for
+#: the query's lifetime.  Pinned so a caller session with the
+#: 200-partition default (e.g. the driver's own) doesn't pay 200 state
+#: stores for a single availableNow batch (~10x slower).  Every state
+#: store pays a fixed open/commit cost PER MICRO-BATCH (r16 measured the
+#: stream-stream join serve walk 2.3s -> 3.3s -> 5.4s at 2 -> 8 -> 16
+#: partitions with identical results — the state fits one partition at
+#: every test SF, so the extra partitions buy pure per-batch overhead);
+#: 4 still exceeds the file-source split count of every test corpus.
+_STATE_PARTITIONS = 4
+#: Python-stateful kernels (applyInPandasWithState /
+#: transformWithStateInPandas) are the exception: their per-batch cost
+#: is the PYTHON COMPUTE over the batch's rows, which scales DOWN with
+#: partitions (measured at sf0.1: streaming_sessionize 3.4 s / 2.6 s /
+#: 2.1 s and streaming_dedup 3.2 s / 2.0 s / 2.0 s at 4 / 8 / 16
+#: partitions — the opposite slope of the JVM-stateful ops above).
+_PY_STATE_PARTITIONS = 16
+
+
 def _run_to_memory_sink(
     spark: SparkSession,
     stream: DataFrame,
     *,
     name: str,
     output_mode: str,
-    state_partitions: int | None = None,
     drain_all: bool = False,
     python_stateful: bool = False,
 ) -> DataFrame:
     for q in spark.streams.active:
         if q.name == name:
             q.stop()
-    # a streaming query's state-store partition count is frozen from
-    # spark.sql.shuffle.partitions at start(): pin it so a caller session
-    # with the 200-partition default (e.g. the driver's own) doesn't pay
-    # 200 state stores for a single availableNow batch (~10x slower).
-    # Every state store pays a fixed open/commit cost PER MICRO-BATCH
-    # (r16 measured the stream-stream join serve walk 2.3s -> 3.3s ->
-    # 5.4s at 2 -> 8 -> 16 partitions with identical results — the state
-    # fits one partition at every test SF, so the extra partitions buy
-    # pure per-batch overhead); 4 still exceeds the file-source split
-    # count of every test corpus.  The count is frozen into the
-    # checkpoint for the query's lifetime, so a production deployment
-    # sizes it to cluster cores via SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    # — parameterised, not a constant baked into the plans.
-    # Python-stateful kernels (applyInPandasWithState /
-    # transformWithStateInPandas) are the exception to the low default:
-    # their per-batch cost is the PYTHON COMPUTE over the batch's rows,
-    # which scales DOWN with partitions (measured at sf0.1:
-    # streaming_sessionize 3.4 s / 2.6 s / 2.1 s and streaming_dedup
-    # 3.2 s / 2.0 s / 2.0 s at 4 / 8 / 16 partitions — the opposite
-    # slope of the JVM-stateful ops above), so they default to a count
-    # sized for compute parallelism, still env-parameterised.
-    if state_partitions is None:
-        if python_stateful:
-            state_partitions = int(
-                os.environ.get("SPARK_GRAFT_STREAM_PY_STATE_PARTITIONS", "16")
-            )
-        else:
-            state_partitions = int(
-                os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
-            )
+    state_partitions = (
+        _PY_STATE_PARTITIONS if python_stateful else _STATE_PARTITIONS
+    )
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:

@@ -32,6 +32,12 @@ LAST planning's (possibly pruned) partitions.
 Supported column types: long/int, double, string, boolean.  NULL is the
 ``\\N`` sentinel (same convention as the csv_roundtrip layer); a string
 VALUE equal to ``\\N`` is therefore not representable here.
+
+The module also holds the snapshot-layer stream sources
+(``snapshot_stream`` / ``catalog_stream``).  They list manifests, expand
+segments and apply merge-on-read deletes through ``manifest_files``, the
+one no-JVM reader of the manifest format that ``snapshot_batch`` and
+``snapshots.snapshot_files`` share.
 """
 
 from __future__ import annotations
@@ -59,6 +65,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from . import manifest_files as mf
 
 _NULL = "\\N"
 _MANIFEST = "manifest.json"
@@ -616,9 +624,10 @@ class _SnapshotStreamReader(DataSourceStreamReader):
     territory).  A vacuumed start offset raises rather than silently
     re-serving the whole table.
 
-    The runner process has no JVM, so manifests are read with plain
-    file IO — file:// layers (the test substrate); an object-store
-    deployment would read manifests through its native client here.
+    The runner process has no JVM, so manifests are read through
+    ``manifest_files`` with plain file IO — file:// layers (the test
+    substrate); an object-store deployment would plug its native client
+    in there.
     The constructor ENFORCES that boundary: a non-file scheme raises
     immediately instead of the silent failure modes plain file IO
     would produce on a remote substrate (an empty version listing
@@ -658,42 +667,13 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         self._mode = options.get("mode", "append")
 
     def _versions(self) -> list[int]:
-        import os
+        return mf.versions(mf.manifest_dir(self._path))
 
-        d = os.path.join(self._path, "_manifests")
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in os.listdir(d)
-            if n.startswith("v") and n.endswith(".json")
-        )
-
-    def _manifest(self, v: int) -> dict:
-        import json
-        import os
-
-        with open(
-            os.path.join(self._path, "_manifests", f"v{v}.json")
-        ) as fh:
-            return json.load(fh)
-
-    def _segment_files(self, seg_path: str) -> list[str]:
-        import json
-
-        with open(seg_path.removeprefix("file:")) as fh:
-            return json.load(fh)["files"]
-
-    def _file_set(self, m: dict) -> set[str]:
-        """All data files of one manifest — segment-aware (format 2
-        loads every segment; only used for initial snapshots and
-        format-migration boundaries, where O(all) is the honest cost)."""
-        if m.get("format", 1) >= 2:
-            out: set[str] = set()
-            for e in m.get("segments") or []:
-                out.update(self._segment_files(e["path"]))
-            return out
-        return set(m["files"])
+    def _data_files(self, m: dict) -> list[str]:
+        """All data files of one manifest, sorted — format 2 loads every
+        segment; only used for initial snapshots and format-migration
+        boundaries, where O(all) is the honest cost."""
+        return sorted(mf.data_files(m, mf.read_segment)[0])
 
     def initialOffset(self) -> dict:
         return {"version": 0}
@@ -725,11 +705,11 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         import os
 
         have_prev = s in vs
-        prev_m = self._manifest(s) if have_prev else None
+        prev_m = mf.read_manifest(self._path, s) if have_prev else None
         out: list[tuple[str, bool, int]] = []
         eq_parts: list[_SnapshotFilePartition] = []
         for v in [x for x in vs if s < x <= e]:
-            m = self._manifest(v)
+            m = mf.read_manifest(self._path, v)
             mode = m.get("mode")
             if not have_prev:
                 # initial snapshot: the start version's full content as
@@ -740,7 +720,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                         "deletion vectors — compact first"
                     )
                 out.extend(
-                    (f, True, v) for f in sorted(self._file_set(m))
+                    (f, True, v) for f in self._data_files(m)
                 )
             elif mode == "append":
                 if prev_m.get("format", 1) < 2 or m.get("format", 1) < 2:
@@ -764,7 +744,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                         out.extend(
                             (f, True, v)
                             for f in sorted(
-                                self._segment_files(entry["path"])
+                                mf.read_segment(entry["path"])["files"]
                             )
                         )
             elif mode == "compact":
@@ -783,21 +763,12 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                     # key hits as 'delete' changes
                     touched = set(ch["touches"])
                     prev_entries = prev_m.get("delete_files") or []
-                    for f in sorted(self._file_set(m)):
+                    for f in self._data_files(m):
                         base = f.rsplit("/", 1)[-1]
                         if base not in touched:
                             continue
-                        pos_dirs = tuple(
-                            pe["path"]
-                            for pe in prev_entries
-                            if pe.get("kind") != "equality"
-                            and base in pe["touches"]
-                        )
-                        eq_entries = tuple(
-                            (pe["path"], pe["key_col"])
-                            for pe in prev_entries
-                            if pe.get("kind") == "equality"
-                            and base in pe["touches"]
+                        pos_dirs, eq_entries = mf.deletes_touching(
+                            prev_entries, base
                         )
                         eq_parts.append(
                             _SnapshotFilePartition(
@@ -853,14 +824,14 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         prev_seg: set[str] | None = None
         prev_files: set[str] = set()
         if have_prev:
-            pm = self._manifest(s)
+            pm = mf.read_manifest(self._path, s)
             if pm.get("format", 1) >= 2:
                 prev_seg = {e["path"] for e in pm.get("segments") or []}
             else:
-                prev_files = self._file_set(pm)
+                prev_files = set(self._data_files(pm))
         files: list[str] = []
         for v in [x for x in vs if s < x <= e]:
-            m = self._manifest(v)
+            m = mf.read_manifest(self._path, v)
             if have_prev and m.get("mode") != "append":
                 raise ValueError(
                     f"version {v} has mode {m.get('mode')!r}: a snapshot "
@@ -880,12 +851,14 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                 cur_seg = {e["path"] for e in m.get("segments") or []}
                 for entry in m.get("segments") or []:
                     if entry["path"] not in prev_seg:
-                        files.extend(sorted(self._segment_files(entry["path"])))
+                        files.extend(
+                            sorted(mf.read_segment(entry["path"])["files"])
+                        )
                 prev_seg = cur_seg
             else:
                 # initial snapshot, or a format boundary in the range:
                 # fall back to the file-set difference once
-                cur = self._file_set(m)
+                cur = set(self._data_files(m))
                 files.extend(sorted(cur - prev_files))
                 prev_files = cur
                 prev_seg = (
@@ -906,56 +879,20 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         if partition.eq_del is not None:
             # equality-key DELETE pre-images, reconstructed per touched
             # file: v-1 rows of THIS file (previous deletes applied),
-            # kept where the key is in the delete set — the same
-            # pyarrow delete-application the snapshot_batch connector
-            # runs, emitted as 'delete' changes
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
+            # kept where the key is in the delete set, emitted as
+            # 'delete' changes
             keys_path, key_col, pos_dirs, eq_entries = partition.eq_del
-            local = partition.file.removeprefix("file:")
-            base = partition.file.rsplit("/", 1)[-1]
-            file_cols = set(pq.read_schema(local).names)
-            need = [c for c in partition.cols if c in file_cols]
-            for _, kc in eq_entries:
-                if kc not in need and kc in file_cols:
-                    need.append(kc)
-            if key_col not in need and key_col in file_cols:
-                need.append(key_col)
-            table = pq.read_table(local, columns=need)
-            if pos_dirs:
-                dead: set[int] = set()
-                for d in pos_dirs:
-                    dv = pq.read_table(
-                        d.removeprefix("file:"), columns=["file", "pos"]
-                    ).filter(pc.equal(pc.field("file"), base))
-                    dead.update(dv.column("pos").to_pylist())
-                if dead:
-                    import numpy as np
-
-                    mask = np.ones(table.num_rows, dtype=bool)
-                    mask[np.fromiter(dead, dtype=np.int64)] = False
-                    table = table.filter(pa.array(mask))
-            for kpath, kc in eq_entries:
-                if kc not in table.column_names:
-                    continue  # evolved file lacking the key: NULL never matches
-                prior = pq.read_table(
-                    kpath.removeprefix("file:"), columns=[kc]
-                ).column(kc)
-                hit = pc.fill_null(
-                    pc.is_in(table.column(kc), value_set=prior), False
-                )
-                table = table.filter(pc.invert(hit))
-            if key_col in table.column_names:
-                dels = pq.read_table(
-                    keys_path.removeprefix("file:"), columns=[key_col]
-                ).column(key_col)
-                keep = pc.fill_null(
-                    pc.is_in(table.column(key_col), value_set=dels), False
-                )
-                table = table.filter(keep)
-            else:
+            table = mf.read_data_file(
+                partition.file,
+                partition.cols,
+                [kc for _, kc in eq_entries] + [key_col],
+            )
+            if key_col not in table.column_names:
                 return  # file lacks the key column: nothing deleted here
+            table = mf.apply_deletes(
+                table, partition.file.rsplit("/", 1)[-1], pos_dirs, eq_entries
+            )
+            table = table.filter(mf.key_hits(table, keys_path, key_col))
             cols = [
                 (
                     table.column(c).to_pylist()
@@ -1000,19 +937,9 @@ def snapshot_stream_schema(path: str, cols: str):
     """Driver-side schema for a snapshot_stream (manifest-only; pass to
     ``readStream.schema(...)`` to skip the engine's DataSource.schema
     Python-worker round-trip, same latency story as replay_schema_ddl)."""
-    import json
-    import os
-
     from pyspark.sql import types as T
 
-    d = os.path.join(path, "_manifests")
-    head = sorted(
-        int(n[1:-5])
-        for n in os.listdir(d)
-        if n.startswith("v") and n.endswith(".json")
-    )[-1]
-    with open(os.path.join(d, f"v{head}.json")) as fh:
-        rec = json.load(fh)["schema"]
+    rec = mf.head_schema(path)
     return T.StructType(
         [
             T.StructField(c, T._parse_datatype_json_string(rec[c]))
@@ -1073,9 +1000,11 @@ def register_snapshot_stream(spark) -> None:
 
     from ..session import ensure_package_on_workers
 
-    # same by-value pickle as replay_parquet: the stream-runner is a
-    # separate driver-side Python process that never sees addPyFile
+    # same by-value pickle as replay_parquet (plus the manifest reader):
+    # the stream-runner is a separate driver-side Python process that
+    # never sees addPyFile
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(mf)
     ensure_package_on_workers(spark)
     spark.dataSource.register(SnapshotStreamDataSource)
 
@@ -1114,27 +1043,14 @@ class _CatalogStreamReader(_SnapshotStreamReader):
         self._pin_cache: dict = {}
 
     def _cat_versions(self) -> list[int]:
-        import os
-
-        d = os.path.join(self._catalog, "_catalog")
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in os.listdir(d)
-            if n.startswith("v") and n.endswith(".json")
-        )
+        return mf.versions(os.path.join(self._catalog, "_catalog"))
 
     def _pin(self, cat_v: int) -> tuple[str, int] | None:
-        import json
-        import os
-
         if cat_v in self._pin_cache:
             return self._pin_cache[cat_v]
-        with open(
+        tables = mf.read_json(
             os.path.join(self._catalog, "_catalog", f"v{cat_v}.json")
-        ) as fh:
-            tables = json.load(fh)["tables"]
+        )["tables"]
         t = tables.get(self._table)
         pin = (
             None
@@ -1241,18 +1157,10 @@ def catalog_stream_schema(
     head-catalog layer pin, then reuse the layer schema helper
     (``mode="cdf"`` adds the ``change_type`` feed column, mirroring
     the layer stream)."""
-    import json
-    import os
-
     d = os.path.join(cat_path, "_catalog")
-    head = sorted(
-        int(n[1:-5])
-        for n in os.listdir(d)
-        if n.startswith("v") and n.endswith(".json")
-    )[-1]
-    with open(os.path.join(d, f"v{head}.json")) as fh:
-        t = json.load(fh)["tables"][table]
-    layer = str(t["path"]).removeprefix("file://").removeprefix("file:")
+    head = mf.versions(d)[-1]
+    t = mf.read_json(os.path.join(d, f"v{head}.json"))["tables"][table]
+    layer = mf.local(str(t["path"]))
     if mode == "cdf":
         return snapshot_cdf_stream_schema(layer, cols)
     return snapshot_stream_schema(layer, cols)
@@ -1292,5 +1200,6 @@ def register_catalog_stream(spark) -> None:
     from ..session import ensure_package_on_workers
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(mf)
     ensure_package_on_workers(spark)
     spark.dataSource.register(CatalogStreamDataSource)

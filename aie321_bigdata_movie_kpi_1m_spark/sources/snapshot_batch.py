@@ -38,10 +38,11 @@ probes run only for int/string values (where ``CAST(x AS STRING)`` is
 reproducible in Python) — anything else conservatively skips bloom
 pruning.
 
-The planner reads manifest/segment JSON with plain file IO (the runner
-has no JVM): correct for ``file://`` layers — the test and single-node
-substrate; an object-store deployment would read manifests through its
-native client here, exactly like ``pyds._SnapshotStreamReader``.
+The planner has no JVM: it lists, reads and prunes manifests, and the
+executors apply deletes, through ``manifest_files`` — the one no-JVM
+reader of the manifest format, shared with ``snapshots.snapshot_files``
+and the ``pyds`` stream sources (plain file IO, so ``file://`` layers;
+an object-store deployment plugs its native client in there).
 
 This connector is the zero-caller-cooperation SQL façade; the native
 ``read_snapshot`` parquet scan remains the bulk path when the caller can
@@ -69,7 +70,6 @@ table); this is the §2.1 source surface composed with the table format.
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -86,6 +86,9 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 from pyspark.sql import types as T
+
+from . import manifest_files as mf
+from .manifest_files import Pred
 
 # ---------------------------------------------------------------------------
 # Pure-Python XXH64, Spark-parity (xxHash64 spec; Spark's XXH64.java is a
@@ -193,45 +196,11 @@ def bloom_probe_positions(value, *, m: int, k: int) -> list[int] | None:
 
 
 # ---------------------------------------------------------------------------
-# No-JVM manifest planning (plain file IO; file:// substrate)
+# Query predicates -> manifest predicates (files read through manifest_files)
 # ---------------------------------------------------------------------------
 
 
-def _local(p: str) -> str:
-    return p.removeprefix("file:")
-
-
-def _read_json(p: str) -> dict:
-    with open(_local(p)) as fh:
-        return json.load(fh)
-
-
-def _versions(path: str) -> list[int]:
-    d = os.path.join(_local(path), "_manifests")
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(n[1:-5])
-        for n in os.listdir(d)
-        if n.startswith("v") and n.endswith(".json")
-    )
-
-
-def _manifest_raw(path: str, v: int) -> dict:
-    return _read_json(os.path.join(_local(path), "_manifests", f"v{v}.json"))
-
-
-@dataclass
-class _Pred:
-    """One pushed predicate, normalized: ``op`` in {eq, gt, gte, lt,
-    lte, in}, over top-level column ``col``."""
-
-    op: str
-    col: str
-    value: object
-
-
-def _normalize_filters(filters: list[Filter]) -> list[_Pred]:
+def _normalize_filters(filters: list[Filter]) -> list[Pred]:
     out = []
     for f in filters:
         if isinstance(
@@ -245,38 +214,10 @@ def _normalize_filters(filters: list[Filter]) -> list[_Pred]:
                 LessThan: "lt",
                 LessThanOrEqual: "lte",
             }[type(f)]
-            out.append(_Pred(op, f.attribute[0], f.value))
+            out.append(Pred(op, f.attribute[0], f.value))
         elif isinstance(f, In) and len(f.attribute) == 1:
-            out.append(_Pred("in", f.attribute[0], list(f.value)))
+            out.append(Pred("in", f.attribute[0], list(f.value)))
     return out
-
-
-def _range_keeps(stats_entry, pred: _Pred) -> bool:
-    """May rows of a file/segment with [min, max] ``stats_entry`` satisfy
-    ``pred``?  Missing stats keep (cannot skip safely); recorded-but-
-    [None, None] (zero-row / all-NULL) skips — every pushed predicate is
-    NULL-rejecting.  Unorderable bound/stat pairs conservatively keep."""
-    if stats_entry is None:
-        return True
-    mn, mx = stats_entry[0], stats_entry[1]
-    if mn is None or mx is None:
-        return False
-    try:
-        if pred.op == "eq":
-            return mn <= pred.value <= mx
-        if pred.op == "gt":
-            return mx > pred.value
-        if pred.op == "gte":
-            return mx >= pred.value
-        if pred.op == "lt":
-            return mn < pred.value
-        if pred.op == "lte":
-            return mn <= pred.value
-        if pred.op == "in":
-            return any(mn <= v <= mx for v in pred.value)
-    except TypeError:
-        return True
-    return True
 
 
 def bucket_transform_value(value, n: int) -> int | None:
@@ -295,7 +236,7 @@ def bucket_transform_value(value, n: int) -> int | None:
     return h % n
 
 
-def _derive_partition_preds(m: dict, preds: list[_Pred]) -> list[_Pred]:
+def _derive_partition_preds(m: dict, preds: list[Pred]) -> list[Pred]:
     """Map the query's predicates on SOURCE columns through the layer's
     recorded partition transforms onto the derived stat names — the
     hidden-partitioning planning step.  Only derivations that are
@@ -312,13 +253,13 @@ def _derive_partition_preds(m: dict, preds: list[_Pred]) -> list[_Pred]:
     """
     import datetime
 
-    out: list[_Pred] = []
+    out: list[Pred] = []
     # PARTITION-SPEC EVOLUTION: probe EVERY spec the layer has written
     # under (``partition_specs_all``), not just the head's active one —
     # files written before an evolution carry only their own spec's
     # derived stats, so probing the historical stat names is what keeps
     # pruning sharp on the old region; a file lacking a probed stat is
-    # conservatively kept (``_range_keeps(None) -> True``), so stale
+    # conservatively kept (``range_keeps(None) -> True``), so stale
     # specs are never wrong, and every derived pred independently
     # over-approximates the source predicate, so ANDing old- and
     # new-spec preds stays sound on every file
@@ -337,14 +278,14 @@ def _derive_partition_preds(m: dict, preds: list[_Pred]) -> list[_Pred]:
                 if p.op == "eq":
                     b = bucket_transform_value(p.value, int(spec["n"]))
                     if b is not None:
-                        out.append(_Pred("eq", name, b))
+                        out.append(Pred("eq", name, b))
                 elif p.op == "in":
                     bs = [
                         bucket_transform_value(v, int(spec["n"]))
                         for v in p.value
                     ]
                     if all(b is not None for b in bs):
-                        out.append(_Pred("in", name, sorted(set(bs))))
+                        out.append(Pred("in", name, sorted(set(bs))))
             elif t == "truncate":
                 w = int(spec["w"])
 
@@ -368,11 +309,11 @@ def _derive_partition_preds(m: dict, preds: list[_Pred]) -> list[_Pred]:
                         "lt": "lte",
                         "lte": "lte",
                     }[p.op]
-                    out.append(_Pred(op, name, tv))
+                    out.append(Pred(op, name, tv))
                 elif p.op == "in":
                     tvs = [trunc(v) for v in p.value]
                     if all(v is not None for v in tvs):
-                        out.append(_Pred("in", name, sorted(set(tvs))))
+                        out.append(Pred("in", name, sorted(set(tvs))))
             else:  # day
                 def day(v):
                     if isinstance(v, datetime.date) and not isinstance(
@@ -392,23 +333,15 @@ def _derive_partition_preds(m: dict, preds: list[_Pred]) -> list[_Pred]:
                         "lt": "lte",
                         "lte": "lte",
                     }[p.op]
-                    out.append(_Pred(op, name, dv))
+                    out.append(Pred(op, name, dv))
                 elif p.op == "in":
                     dvs = [day(v) for v in p.value]
                     if all(v is not None for v in dvs):
-                        out.append(_Pred("in", name, sorted(set(dvs))))
+                        out.append(Pred("in", name, sorted(set(dvs))))
     return out
 
 
-def _hex_has_bits(hx: str, positions: list[int]) -> bool:
-    arr = bytes.fromhex(hx) if hx else b""
-    for p in positions:
-        if p // 8 >= len(arr) or not (arr[p // 8] >> (p % 8)) & 1:
-            return False
-    return True
-
-
-def _bloom_pos_lists(m: dict, preds: list[_Pred]) -> list[list[int]] | None:
+def _bloom_pos_lists(m: dict, preds: list[Pred]) -> list[list[int]] | None:
     """Probe position lists for eq/IN predicates on the layer's bloom
     column — ANDed across predicates is wrong (a row satisfies ALL
     predicates, so ANY single predicate's definite-absence suffices);
@@ -438,84 +371,28 @@ def _bloom_pos_lists(m: dict, preds: list[_Pred]) -> list[list[int]] | None:
 
 
 def plan_snapshot_scan(
-    path: str, version: int | None, preds: list[_Pred]
+    path: str, version: int | None, preds: list[Pred]
 ) -> dict:
-    """Two-level manifest pruning, pure Python: returns
-    {"files": [...], "delete_entries": [...], "schema": {...},
-    "n_segments_total", "n_segments_read", "n_files_total"} for the
-    pruned read.  Mirrors ``snapshots.snapshot_files`` semantics
-    (segment-entry ranges + bloom unions first, then per-file stats +
-    blooms); pruning is never lossy — anything unknown keeps."""
-    versions = _versions(path)
+    """Two-level manifest pruning, pure Python: ``manifest_files.prune``
+    (its {"files", "n_segments_total", "n_segments_read",
+    "n_files_total", ...}) plus the version's "delete_entries" and
+    "schema" record.  Same prune as ``snapshots.snapshot_files``, with
+    the query's predicates widened through the layer's partition
+    transforms and its eq/IN probes on the bloom column hashed here."""
+    versions = mf.versions(mf.manifest_dir(path))
     if not versions:
         raise FileNotFoundError(f"no committed snapshot under {path}")
     v = versions[-1] if version is None else version
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions} at {path}")
-    m = _manifest_raw(path, v)
+    m = mf.read_manifest(path, v)
     # hidden partitioning: predicates on source columns additionally
     # probe the derived transform stats (bucket/truncate/day)
     preds = list(preds) + _derive_partition_preds(m, preds)
-    pos_list = _bloom_pos_lists(m, preds)
-    n_files_total = 0
-    n_segments_read = 0
-    files: list[str] = []
-    stats: dict = {}
-    blooms: dict = {}
-    if m.get("format", 1) >= 2:
-        entries = m.get("segments") or []
-        n_segments_total = len(entries)
-        n_files_total = sum(int(e.get("n_files") or 0) for e in entries)
-        survivors = []
-        for e in entries:
-            est = e.get("stats") or {}
-            if not all(_range_keeps(est.get(p.col), p) for p in preds):
-                continue
-            if (
-                pos_list is not None
-                and e.get("bloom_union") is not None
-                and not any(
-                    _hex_has_bits(e["bloom_union"], pos) for pos in pos_list
-                )
-            ):
-                continue
-            survivors.append(e)
-        for e in survivors:
-            seg = _read_json(e["path"])
-            n_segments_read += 1
-            files.extend(seg["files"])
-            stats.update(seg.get("stats") or {})
-            blooms.update(seg.get("blooms") or {})
-        files = sorted(files)
-    else:
-        files = list(m["files"])
-        stats = m.get("stats", {}) or {}
-        blooms = m.get("blooms", {}) or {}
-        n_segments_total = 0
-        n_files_total = len(files)
-    kept = []
-    for f in files:
-        base = f.rsplit("/", 1)[-1]
-        fst = stats.get(base, {})
-        if not all(_range_keeps(fst.get(p.col), p) for p in preds):
-            continue
-        if pos_list is not None:
-            bits = blooms.get(base)
-            if bits is not None:
-                bitset = set(bits)
-                if not any(
-                    all(pp in bitset for pp in pos) for pos in pos_list
-                ):
-                    continue
-        kept.append(f)
-    return {
-        "files": kept,
-        "delete_entries": m.get("delete_files") or [],
-        "schema": m.get("schema") or {},
-        "n_segments_total": n_segments_total,
-        "n_segments_read": n_segments_read,
-        "n_files_total": n_files_total,
-    }
+    plan = mf.prune(m, preds, _bloom_pos_lists(m, preds), mf.read_segment)
+    plan["delete_entries"] = m.get("delete_files") or []
+    plan["schema"] = m.get("schema") or {}
+    return plan
 
 
 # ---------------------------------------------------------------------------
@@ -577,7 +454,7 @@ class _SnapshotBatchReader(DataSourceReader):
             )
         self._plan_log = options.get("plan_log")
         self._cols = tuple(f.name for f in schema.fields)
-        self._preds: list[_Pred] = []
+        self._preds: list[Pred] = []
 
     def pushFilters(self, filters: list[Filter]):
         self._preds = _normalize_filters(filters)
@@ -588,7 +465,7 @@ class _SnapshotBatchReader(DataSourceReader):
     def partitions(self):
         plan = plan_snapshot_scan(self._path, self._version, self._preds)
         if self._plan_log:
-            with open(_local(self._plan_log), "w") as fh:
+            with open(mf.local(self._plan_log), "w") as fh:
                 json.dump(
                     {
                         "n_files_planned": len(plan["files"]),
@@ -607,22 +484,12 @@ class _SnapshotBatchReader(DataSourceReader):
             ]
         parts = []
         for f in plan["files"]:
-            base = f.rsplit("/", 1)[-1]
-            pos_dirs = []
-            eq_entries = []
-            for e in plan["delete_entries"]:
-                if e.get("kind") == "equality":
-                    if base in e["touches"]:
-                        eq_entries.append((e["path"], e["key_col"]))
-                elif base in e["touches"]:
-                    pos_dirs.append(e["path"])
+            pos_dirs, eq_entries = mf.deletes_touching(
+                plan["delete_entries"], f.rsplit("/", 1)[-1]
+            )
             parts.append(
                 _SnapFilePartition(
-                    f,
-                    tuple(pos_dirs),
-                    tuple(eq_entries),
-                    self._cols,
-                    schema_rec_json,
+                    f, pos_dirs, eq_entries, self._cols, schema_rec_json
                 )
             )
         return parts
@@ -630,49 +497,19 @@ class _SnapshotBatchReader(DataSourceReader):
     def read(self, partition: _SnapFilePartition) -> Iterator:
         # executor-side: one parquet file -> delete-applied Arrow batches
         import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         if partition.file is None:
             return
-        base = partition.file.rsplit("/", 1)[-1]
-        # COLUMN-PRUNED read: the projection plus any equality-delete
-        # key column the filter step needs (dropped again by the final
-        # select) — at 100 TB reading 2 of 40 columns is the difference
-        # between a projection and a table scan
-        file_cols = set(pq.read_schema(_local(partition.file)).names)
-        need = [c for c in partition.cols if c in file_cols]
-        for _, key_col in partition.eq_entries:
-            if key_col not in need and key_col in file_cols:
-                need.append(key_col)
-        table = pq.read_table(_local(partition.file), columns=need)
-        if partition.pos_dirs:
-            dead: set[int] = set()
-            for d in partition.pos_dirs:
-                dv = pq.read_table(
-                    _local(d), columns=["file", "pos"]
-                ).filter(pc.equal(pc.field("file"), base))
-                dead.update(dv.column("pos").to_pylist())
-            if dead:
-                # vectorized mask — a per-row Python loop here would put
-                # O(rows) interpreter work on the executor hot path
-                import numpy as np
-
-                mask = np.ones(table.num_rows, dtype=bool)
-                mask[np.fromiter(dead, dtype=np.int64)] = False
-                table = table.filter(pa.array(mask))
-        for kpath, key_col in partition.eq_entries:
-            if key_col not in table.column_names:
-                # an evolved carried file lacking the key column reads
-                # NULL for it — NULL never equals a key, nothing to drop
-                continue
-            keys = pq.read_table(_local(kpath), columns=[key_col]).column(
-                key_col
-            )
-            hit = pc.fill_null(
-                pc.is_in(table.column(key_col), value_set=keys), False
-            )
-            table = table.filter(pc.invert(hit))
+        table = mf.apply_deletes(
+            mf.read_data_file(
+                partition.file,
+                partition.cols,
+                [kc for _, kc in partition.eq_entries],
+            ),
+            partition.file.rsplit("/", 1)[-1],
+            partition.pos_dirs,
+            partition.eq_entries,
+        )
         target = _arrow_schema(
             json.loads(partition.schema_rec_json), list(partition.cols)
         )
@@ -689,11 +526,11 @@ class _SnapshotBatchReader(DataSourceReader):
 
 
 def _version_as_of(path: str, ts_epoch: float) -> int:
-    versions = _versions(path)
     eligible = [
         v
-        for v in versions
-        if float(_manifest_raw(path, v).get("committed_at") or 0) <= ts_epoch
+        for v in mf.versions(mf.manifest_dir(path))
+        if float(mf.read_manifest(path, v).get("committed_at") or 0)
+        <= ts_epoch
     ]
     if not eligible:
         raise FileNotFoundError(
@@ -716,16 +553,12 @@ class SnapshotBatchDataSource(DataSource):
         return "snapshot_batch"
 
     def schema(self):
-        path = self.options["path"]
-        versions = _versions(path)
-        if not versions:
-            raise FileNotFoundError(f"no committed snapshot under {path}")
-        v = (
-            int(self.options["version"])
-            if self.options.get("version")
-            else versions[-1]
+        path, v = self.options["path"], self.options.get("version")
+        rec = (
+            mf.read_manifest(path, int(v)).get("schema") or {}
+            if v
+            else mf.head_schema(path)
         )
-        rec = _manifest_raw(path, v).get("schema") or {}
         if self.options.get("cols"):
             # caller-side PROJECTION: only these columns plan, transfer
             # and read (the Python DataSource API has no pruning hook,
@@ -758,9 +591,11 @@ def register_snapshot_batch(spark) -> None:
     from ..session import ensure_package_on_workers
 
     # planning runs in a driver-side Python worker that never sees
-    # addPyFile — pickle this module by value so the class arrives
-    # self-contained (pyarrow + stdlib only), same as the stream sources
+    # addPyFile — pickle this module and the manifest reader by value so
+    # the class arrives self-contained (pyarrow + stdlib only), same as
+    # the stream sources
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(mf)
     ensure_package_on_workers(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SnapshotBatchDataSource)
@@ -789,7 +624,7 @@ def read_snapshot_pushdown(
     ``read_snapshot`` pins against, pinned the same way."""
     register_snapshot_batch(spark)
     if version is None and as_of is None:
-        versions = _versions(path)
+        versions = mf.versions(mf.manifest_dir(path))
         if not versions:
             raise FileNotFoundError(f"no committed snapshot under {path}")
         version = versions[-1]

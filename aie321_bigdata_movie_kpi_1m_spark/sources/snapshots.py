@@ -53,8 +53,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from ..operators.materialize import materialize
+from . import manifest_files
 
-_MANIFEST_DIR = "_manifests"
+_MANIFEST_DIR = manifest_files.MANIFEST_DIR
 
 
 class InProcessCommitLock:
@@ -397,15 +398,7 @@ def snapshot_versions(spark: SparkSession, path: str) -> list[int]:
     """Committed versions of the layer at ``path``, ascending."""
     lp = _local_path(spark, path)
     if lp is not None:
-        try:
-            names = os.listdir(os.path.join(lp, _MANIFEST_DIR))
-        except FileNotFoundError:
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in names
-            if n.startswith("v") and n.endswith(".json")
-        )
+        return manifest_files.versions(manifest_files.manifest_dir(lp))
     jvm, fs = _fs(spark, path)
     mdir = _hpath(jvm, f"{path}/{_MANIFEST_DIR}")
     if not fs.exists(mdir):
@@ -600,15 +593,6 @@ def _bits_to_hex(bits) -> str:
     return bytes(arr).hex()
 
 
-def _hex_has_bits(hx: str, positions: list[int]) -> bool:
-    """True iff every probe position is set in the hex bitmap."""
-    arr = bytes.fromhex(hx) if hx else b""
-    for p in positions:
-        if p // 8 >= len(arr) or not (arr[p // 8] >> (p % 8)) & 1:
-            return False
-    return True
-
-
 def _write_segment_entries(
     spark: SparkSession,
     path: str,
@@ -718,20 +702,25 @@ def _entries_from_inline(
     )
 
 
+def _range_preds(col: str, lo, hi) -> list:
+    """A ``(col, lo, hi)`` range as its two manifest predicates (a None
+    bound is open)."""
+    return [
+        manifest_files.Pred("gte", col, lo),
+        manifest_files.Pred("lte", col, hi),
+    ]
+
+
 def _entry_range_keeps(entry_stats: dict, col: str, lo, hi) -> bool:
-    """Segment-entry-level range test (True = cannot skip).  Mirrors the
-    per-file semantics; a bound/stat pair the comparison cannot order
-    (e.g. a date bound against a migrated string stat) conservatively
-    keeps the segment — pruning is an optimization, never a filter."""
-    s = entry_stats.get(col)
-    if s is None:
-        return True
-    if s[0] is None or s[1] is None:
-        return False
-    try:
-        return (lo is None or s[1] >= lo) and (hi is None or s[0] <= hi)
-    except TypeError:
-        return True
+    """Segment-entry-level range test (True = cannot skip), with the
+    shared ``manifest_files.range_keeps`` semantics: a bound/stat pair
+    the comparison cannot order (e.g. a date bound against a migrated
+    string stat) conservatively keeps the segment — pruning is an
+    optimization, never a filter."""
+    return all(
+        manifest_files.range_keeps(entry_stats.get(col), p)
+        for p in _range_preds(col, lo, hi)
+    )
 
 
 def _type_from_json(dtype_json: str):
@@ -1533,76 +1522,17 @@ def snapshot_files(
             pos_list = _bloom_positions_multi(
                 spark, values, m=bloom_m, k=bloom_k
             )
-    if m.get("format", 1) >= 2:
-        # segment-level skip FIRST: entries whose per-column [min, max]
-        # cannot intersect the range are dropped before their segment
-        # file is even opened — planning cost is O(surviving segments),
-        # not O(all files ever), the property that keeps a 10^7-file
-        # layer plannable from KBs of JSON
-        entries = m.get("segments") or []
-        for col, lo, hi in ranges:
-            entries = [
-                e
-                for e in entries
-                if _entry_range_keeps(e.get("stats") or {}, col, lo, hi)
-            ]
-        if pos_list is not None:
-            # segment-level bloom skip: a segment whose recorded bloom
-            # UNION is missing any probe bit definitely lacks the value
-            # — skipped without even loading its segment file (entries
-            # without a union are conservatively loaded).  IN-lists keep
-            # a segment if ANY value's bits are all present.
-            entries = [
-                e
-                for e in entries
-                if e.get("bloom_union") is None
-                or any(_hex_has_bits(e["bloom_union"], pos) for pos in pos_list)
-            ]
-        files = []
-        stats = {}
-        blooms = {}
-        for e in entries:
-            seg = _read_segment(spark, e["path"])
-            files.extend(seg["files"])
-            stats.update(seg.get("stats") or {})
-            blooms.update(seg.get("blooms") or {})
-        files = sorted(files)
-    else:
-        files = m["files"]
-        stats = m.get("stats", {})
-        blooms = m.get("blooms", {})
-    for col, lo, hi in ranges:
-        kept = []
-        for f in files:
-            s = stats.get(f.rsplit("/", 1)[-1], {}).get(col)
-            if s is None:
-                kept.append(f)  # no stats recorded -> cannot skip safely
-            elif s[0] is None or s[1] is None:
-                # stats recorded but no min/max: zero rows, or every
-                # value NULL — safe to skip either way, because a range
-                # predicate is NULL-rejecting (the caller's contract)
-                continue
-            elif (lo is None or s[1] >= lo) and (hi is None or s[0] <= hi):
-                kept.append(f)
-        files = kept
-    if pos_list is not None:
-        if blooms:
-            # probe with the LAYER'S recorded bloom parameters (manifests
-            # from before parameter recording used the then-current
-            # constants, which the defaults preserve), reusing the
-            # positions computed once above
-            kept = []
-            for f in files:
-                bits = blooms.get(f.rsplit("/", 1)[-1])
-                if bits is None:
-                    kept.append(f)  # no bloom recorded -> keep
-                else:
-                    bitset = set(bits)
-                    # IN-list: maybe-present for ANY probe value keeps
-                    # the file (bloom can't say no)
-                    if any(all(p in bitset for p in pos) for pos in pos_list):
-                        kept.append(f)
-            files = kept
+    # the shared no-JVM prune (segment-entry ranges + bloom unions
+    # first — planning cost is O(surviving segments), not O(all files
+    # ever) — then per-file stats + blooms), reading segments through
+    # the signature-validated cache
+    plan = manifest_files.prune(
+        m,
+        [p for r in ranges for p in _range_preds(*r)],
+        pos_list,
+        lambda p: _read_segment(spark, p),
+    )
+    files, blooms = plan["files"], plan["blooms"]
     if probe_df is not None and blooms:
         files = _prune_files_probe_df(
             spark,

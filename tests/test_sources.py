@@ -248,7 +248,6 @@ class TestChunkedCsvDataSource:
         register_chunked_csv(spark)
 
     @pytest.mark.slow
-
     def test_roundtrip_exact_and_chunk_cap(self, spark, tmp_path):
         import json
 
@@ -270,7 +269,6 @@ class TestChunkedCsvDataSource:
         assert df.exceptAll(back).count() == 0
 
     @pytest.mark.slow
-
     def test_append_mode_keeps_existing_chunks(self, spark, tmp_path):
         """mode('append') must MERGE the manifest: the old commit()
         rewrote it with only the new job's files, silently dropping every
@@ -448,7 +446,6 @@ class TestReplayParquetStreamSource:
         assert sum(batches2) == 0
 
     @pytest.mark.slow
-
     def test_partitioned_reader_task_retry_exactly_once(self, sf_dir, tmp_path):
         """Executor-side reads must be idempotent under TASK RETRY: fail
         one range partition's first attempt mid-batch and assert the
@@ -3392,7 +3389,6 @@ class TestHiddenPartitioning:
         assert log_all["n_files_planned"] == log_all["n_files_total"]
 
     @pytest.mark.slow
-
     def test_partition_spec_evolution_prunes_both_generations(
         self, spark, tmp_path
     ):
@@ -4140,6 +4136,51 @@ class TestSnapshotPushdownScan:
         assert got == 1600
         plan = json.load(open(log))
         assert plan["n_files_planned"] == 16
+
+    def test_planners_agree_on_pruned_file_sets(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """``snapshots.snapshot_files`` (the JVM-side planner) and
+        ``plan_snapshot_scan`` (the no-JVM pushdown planner) share one
+        prune, so a range, a point and an IN probe plan the SAME file
+        set over a multi-segment layer whose bloom column is
+        hash-scrambled across files (only blooms can prune it)."""
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+        from aie321_bigdata_movie_kpi_1m_spark.sources.manifest_files import (
+            Pred,
+        )
+        from aie321_bigdata_movie_kpi_1m_spark.sources.snapshot_batch import (
+            plan_snapshot_scan,
+        )
+
+        path = str(tmp_path / "layer")
+        monkeypatch.setattr(snap, "_SEGMENT_MAX_FILES", 4)
+        snap.commit_snapshot(
+            spark,
+            spark.range(0, 1600)
+            .selectExpr("id AS k", "(id * 7919) % 1600 AS h")
+            .repartitionByRange(16, "k"),
+            path,
+            stats_cols=["k"],
+            bloom_col="h",
+        )
+        all_files = set(snap.snapshot_files(spark, path))
+        assert len(all_files) == 16
+        in_values = [5, 900, 1500]
+        probes = [
+            (
+                {"prune_range": ("k", 100, 199)},
+                [Pred("gte", "k", 100), Pred("lte", "k", 199)],
+            ),
+            ({"prune_point": ("h", 777)}, [Pred("eq", "h", 777)]),
+            ({"prune_point": ("h", in_values)}, [Pred("in", "h", in_values)]),
+        ]
+        for kwargs, preds in probes:
+            jvm_side = snap.snapshot_files(spark, path, **kwargs)
+            plan = plan_snapshot_scan(path, None, preds)
+            assert plan["n_segments_total"] == 4
+            assert set(jvm_side) == set(plan["files"]), kwargs
+            assert 0 < len(jvm_side) < len(all_files), kwargs
 
     def test_deletes_applied_and_time_travel(
         self, spark, tmp_path, monkeypatch
@@ -6702,7 +6743,6 @@ class TestCatalogMaintenanceSweep:
     per-path min_pinned retention floors."""
 
     @pytest.mark.slow
-
     def test_sweep_act_replan_and_pinned_reads_survive(
         self, spark, tmp_path
     ):
